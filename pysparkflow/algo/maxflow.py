@@ -54,7 +54,12 @@ sides (frontier, stored-path meet) gate on ESTIMATED BYTES — rows x
 STATE_BROADCAST_BYTES — because their rows are arrays, not scalars; the
 narrow visited column keeps the STATE_BROADCAST_ROWS row gate. Driver traffic per phase is
 the meet candidates (bounded by ``max_candidates``) and the accepted-flow
-deltas — both tiny. All randomness is hash-seeded (ff1/Vertex.java:60
+deltas — both tiny. Driver-built tables (seed frontiers, the empty and
+delta flow tables, join-repair deltas; super edges in graph.py) enter
+plans as Arrow LocalRelations (session.local_frame), scanned in the JVM:
+built from a Python list they were PythonRDD scans, and every action
+that re-scanned one paid ~210 ms of Python-worker tasks on a 4-core
+host. All randomness is hash-seeded (ff1/Vertex.java:60
 discipline), so task retries and speculative execution are safe.
 """
 
@@ -74,6 +79,7 @@ from pyspark.sql.window import Window
 from pysparkflow.engine.acceptor import GreedyAcceptor
 from pysparkflow.engine.metrics import RoundMetrics
 from pysparkflow.graph.graph import FlowGraph
+from pysparkflow.session import local_frame
 
 _FRONTIER_SCHEMA = T.StructType(
     [
@@ -81,6 +87,12 @@ _FRONTIER_SCHEMA = T.StructType(
         T.StructField("verts", T.ArrayType(T.LongType()), False),
         T.StructField("ress", T.ArrayType(T.LongType()), False),
     ]
+)
+_FLOWS_SCHEMA = T.StructType(
+    [T.StructField(c, T.LongType()) for c in ("u", "v", "f")]
+)
+_REPAIR_SCHEMA = T.StructType(
+    [T.StructField(c, T.LongType()) for c in ("au", "av", "d")]
 )
 
 # above this many flow-carrying edges, stop broadcasting the flows table
@@ -129,7 +141,7 @@ class MaxFlowResult:
 
 
 def _empty_flows(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], schema="u long, v long, f long")
+    return local_frame(spark, [], _FLOWS_SCHEMA)
 
 
 def _repair_paths(df: DataFrame, delta_items: list) -> DataFrame:
@@ -226,15 +238,12 @@ def _residual_arcs(
 ) -> DataFrame:
     """Directed residual arcs from the canonical undirected edges + signed
     flows: residue(u->v) = cap - f, residue(v->u) = cap + f
-    (ff2/Edge.java:29-33). ``flows=None`` (zero flow) skips the join —
-    rebuilding even an empty broadcast costs ~300ms per action."""
-    if flows is None:
-        j = edges.withColumn("f", F.lit(0).cast("long"))
-    else:
-        fl = F.broadcast(flows) if broadcast_flows else flows
-        j = edges.join(fl, ["u", "v"], "left").withColumn(
-            "f", F.coalesce(F.col("f"), F.lit(0))
-        )
+    (ff2/Edge.java:29-33). Zero flow needs no special case: the empty
+    flows table is an empty LocalRelation and Catalyst drops the join."""
+    fl = F.broadcast(flows) if broadcast_flows else flows
+    j = edges.join(fl, ["u", "v"], "left").withColumn(
+        "f", F.coalesce(F.col("f"), F.lit(0))
+    )
     fwd = j.select(
         F.col("u").alias("src"), F.col("v").alias("dst"), (F.col("cap") - F.col("f")).alias("res")
     )
@@ -255,7 +264,8 @@ def _extend(
     max_path_len: int | None,
     n_frontier: int | None = None,
     n_own: int | None = None,
-    frontier_row_bytes: int | None = None,
+    *,
+    frontier_row_bytes: int,
 ) -> DataFrame:
     """One frontier extension round (D4 + D5 + D10).
 
@@ -277,9 +287,10 @@ def _extend(
     caller's static per-row byte bound and the broadcast only fires
     under the 32 MB STATE_BROADCAST_BYTES budget (VERDICT r13 #1 — the
     row gate alone would happily broadcast a hundreds-of-MB frontier at
-    cluster scale). The visited side is a single long column, so its
-    row gate's 16-B/row arithmetic holds as-is. Join results are
-    identical either way."""
+    cluster scale). It is required and keyword-only: a narrow-row
+    default would silently re-open that hazard. The visited side is a
+    single long column, so its row gate's 16-B/row arithmetic holds
+    as-is. Join results are identical either way."""
     from pysparkflow.engine.partitioning import (
         STATE_BROADCAST_ROWS,
         wide_rows_broadcastable,
@@ -287,9 +298,7 @@ def _extend(
 
     if max_path_len is not None:
         frontier = frontier.where(F.size("verts") <= max_path_len)
-    if n_frontier is not None and wide_rows_broadcastable(
-        n_frontier, frontier_row_bytes if frontier_row_bytes is not None else 16
-    ):
+    if n_frontier is not None and wide_rows_broadcastable(n_frontier, frontier_row_bytes):
         frontier = F.broadcast(frontier)
     if forward:
         ext = frontier.join(arcs, frontier.vertex == arcs.src).select(
@@ -396,9 +405,7 @@ def max_flow(
         # round's joins scan the in-memory arc cache
         _t = _time.time()
         arcs = _residual_arcs(
-            edges,
-            flows if flow_edge_count > 0 else None,
-            broadcast_flows=flow_edge_count <= _FLOW_BROADCAST_LIMIT,
+            edges, flows, broadcast_flows=flow_edge_count <= _FLOW_BROADCAST_LIMIT
         ).persist()
         phase_cache.append(arcs)
         _seg("arcs_build", _t)
@@ -411,11 +418,10 @@ def max_flow(
         rnd = 0
         if stored is None:
             _t = _time.time()
-            seed_rows = [(int(s_id), [int(s_id)], []), (int(t_id), [int(t_id)], [])]
-            # literal 1-row DFs: no lineage to truncate, nothing to
-            # materialize — checkpointing them was two pure-overhead jobs
-            frontier_s = spark.createDataFrame([seed_rows[0]], _FRONTIER_SCHEMA)
-            frontier_t = spark.createDataFrame([seed_rows[1]], _FRONTIER_SCHEMA)
+            # literal 1-row LocalRelations: no lineage to truncate, nothing
+            # to materialize — checkpointing them was two pure-overhead jobs
+            frontier_s = local_frame(spark, [(s_id, [s_id], [])], _FRONTIER_SCHEMA)
+            frontier_t = local_frame(spark, [(t_id, [t_id], [])], _FRONTIER_SCHEMA)
             paths_s, paths_t = frontier_s, frontier_t
             n_s, n_t = 1, 1
             v_s, v_t = 1, 1  # accumulated visited-count upper bounds
@@ -580,7 +586,7 @@ def max_flow(
 
         _t = _time.time()
         deltas = acceptor.flow_deltas()
-        delta_df = spark.createDataFrame(deltas, schema="u long, v long, f long")
+        delta_df = local_frame(spark, deltas, _FLOWS_SCHEMA)
         # lazy checkpoint + count: ONE job materializes the checkpoint and
         # returns the count (eager=True + count was two)
         flows = (
@@ -605,9 +611,8 @@ def max_flow(
             else:
                 # too many deltas for a map literal — distributed join
                 # repair instead of abandoning the stored search state
-                repair_df = spark.createDataFrame(
-                    [(x, y, d) for (x, y), d in delta_items],
-                    schema="au long, av long, d long",
+                repair_df = local_frame(
+                    spark, [(x, y, d) for (x, y), d in delta_items], _REPAIR_SCHEMA
                 )
                 rep_s = _repair_paths_join(paths_s, repair_df)
                 rep_t = _repair_paths_join(paths_t, repair_df)

@@ -26,6 +26,9 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from pysparkflow.session import local_frame
 
 # Floor for super-source/sink edge capacity (the reference hardcodes
 # 10_000_000, ff2/FordFulkerson.java:235, ff3/FordFulkerson.java:119,
@@ -36,6 +39,10 @@ from pyspark.sql import functions as F
 # keep this constant only as a floor so tiny graphs behave like the
 # reference's.
 INF_CAPACITY = 10_000_000
+
+_EDGE_SCHEMA = T.StructType(
+    [T.StructField(c, T.LongType()) for c in ("u", "v", "cap")]
+)
 
 
 def symmetrize(edge_pairs: DataFrame, cap_col: str | None = None) -> DataFrame:
@@ -171,7 +178,7 @@ class FlowGraph:
             (min(t_id, x), max(t_id, x), inf_of.get(x, INF_CAPACITY))
             for x in sinks
         ]
-        super_df = spark.createDataFrame(super_rows, schema="u long, v long, cap long")
+        super_df = local_frame(spark, super_rows, _EDGE_SCHEMA)
         return (
             FlowGraph(
                 spark,

@@ -180,9 +180,9 @@ def test_repair_join_equals_map(spark):
     assert (5, (1, 3, 5), (2, 0)) not in b   # saturated path dropped
 
 
-def test_join_repair_end_to_end(spark):
-    # force every epoch through the distributed join repair and confirm
-    # the exact optimum is still reached (unit-cap grid, multi-phase)
+def _grid_edges():
+    """5x5 unit-capacity grid on vertices 100..124: multi-phase max-flow
+    (corner to corner == 2)."""
     edges = []
     for r in range(5):
         for c in range(5):
@@ -191,7 +191,13 @@ def test_join_repair_end_to_end(spark):
                 edges.append((v, v + 1, 1))
             if r < 4:
                 edges.append((v, v + 5, 1))
-    _check(spark, edges, [100], [124], repair_join_threshold=0,
+    return edges
+
+
+def test_join_repair_end_to_end(spark):
+    # force every epoch through the distributed join repair and confirm
+    # the exact optimum is still reached (unit-cap grid, multi-phase)
+    _check(spark, _grid_edges(), [100], [124], repair_join_threshold=0,
            excess_list_max=4)
 
 
@@ -250,23 +256,31 @@ def test_extend_probes_arc_cache_without_sort_merge(spark):
     carry no size statistics, so Catalyst otherwise exchanges and sorts
     the arc cache for BOTH joins every round (the r13 probe measured
     77 MB of per-query shuffle, 11 MB after gating)."""
-    from pysparkflow.algo.maxflow import _extend, _residual_arcs
+    from pysparkflow.algo.maxflow import _empty_flows, _extend, _residual_arcs
 
     edges = [(10, 11, 3), (11, 12, 2), (12, 13, 5), (11, 13, 4)]
     g = _build(spark, edges)
-    arcs = _residual_arcs(g.edges.persist(), None, True).persist()
+    arcs = _residual_arcs(g.edges.persist(), _empty_flows(spark), True).persist()
     seed = spark.createDataFrame(
         [(10, [10], [])], "vertex long, verts array<long>, ress array<long>"
     )
-    f1 = _extend(seed, arcs, seed, True, 1, 42, 1, None, n_frontier=1, n_own=1).localCheckpoint()
-    out = _extend(f1, arcs, f1, True, 1, 42, 2, None, n_frontier=2, n_own=3)
+    f1 = _extend(
+        seed, arcs, seed, True, 1, 42, 1, None, n_frontier=1, n_own=1,
+        frontier_row_bytes=24 + 16 * 2,
+    ).localCheckpoint()
+    out = _extend(
+        f1, arcs, f1, True, 1, 42, 2, None, n_frontier=2, n_own=3,
+        frontier_row_bytes=24 + 16 * 3,
+    )
     plan = out._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     assert "SortMergeJoin" not in plan, plan[:2000]
     assert plan.count("BroadcastHashJoin") >= 2, plan[:2000]
     # ungated (counts unknown) keeps the legacy shuffle-join fallback
-    fallback = _extend(f1, arcs, f1, True, 1, 42, 2, None)
+    fallback = _extend(
+        f1, arcs, f1, True, 1, 42, 2, None, frontier_row_bytes=24 + 16 * 3
+    )
     fplan = fallback._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
@@ -280,7 +294,7 @@ def test_wide_frontier_gate_is_byte_aware(spark):
     max_path_len ~30 a 1.9M-row frontier is hundreds of MB — an OOM the
     row gate would happily broadcast). The narrow visited side keeps its
     row gate."""
-    from pysparkflow.algo.maxflow import _extend, _residual_arcs
+    from pysparkflow.algo.maxflow import _empty_flows, _extend, _residual_arcs
     from pysparkflow.engine.partitioning import (
         STATE_BROADCAST_BYTES,
         STATE_BROADCAST_ROWS,
@@ -300,11 +314,14 @@ def test_wide_frontier_gate_is_byte_aware(spark):
 
     edges = [(10, 11, 3), (11, 12, 2), (12, 13, 5), (11, 13, 4)]
     g = _build(spark, edges)
-    arcs = _residual_arcs(g.edges.persist(), None, True).persist()
+    arcs = _residual_arcs(g.edges.persist(), _empty_flows(spark), True).persist()
     seed = spark.createDataFrame(
         [(10, [10], [])], "vertex long, verts array<long>, ress array<long>"
     )
-    f1 = _extend(seed, arcs, seed, True, 1, 42, 1, None, n_frontier=1, n_own=1).localCheckpoint()
+    f1 = _extend(
+        seed, arcs, seed, True, 1, 42, 1, None, n_frontier=1, n_own=1,
+        frontier_row_bytes=24 + 16 * 2,
+    ).localCheckpoint()
     # at fixture scale Catalyst auto-broadcasts the tiny arc cache and
     # masks the gate; pin the GATE's behaviour by making explicit hints
     # the only broadcast source
@@ -336,3 +353,52 @@ def test_wide_frontier_gate_is_byte_aware(spark):
         assert sorted(map(tuple, wide.collect())) == sorted(map(tuple, ok.collect()))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+
+
+def test_extend_requires_frontier_row_bytes(spark):
+    """ADVICE r14 item 2: omitting the frontier's byte width must fail
+    loudly instead of silently falling back to the 16-B narrow-row gate
+    (the OOM hazard of VERDICT r13 #1)."""
+    from pysparkflow.algo.maxflow import (
+        _FRONTIER_SCHEMA,
+        _empty_flows,
+        _extend,
+        _residual_arcs,
+    )
+
+    g = _build(spark, [(10, 11, 3)])
+    arcs = _residual_arcs(g.edges, _empty_flows(spark), True)
+    seed = spark.createDataFrame([(10, [10], [])], _FRONTIER_SCHEMA)
+    with pytest.raises(TypeError, match="frontier_row_bytes"):
+        _extend(seed, arcs, seed, True, 1, 42, 1, None, n_frontier=1, n_own=1)
+    with pytest.raises(TypeError):
+        # keyword-only: an eleventh positional argument is refused too
+        _extend(seed, arcs, seed, True, 1, 42, 1, None, 1, 1, 56)
+
+
+@pytest.mark.parametrize("repair_join_threshold", [20_000, 0], ids=["map", "join"])
+def test_max_flow_builds_no_python_rdd(spark, monkeypatch, repair_join_threshold):
+    """Every driver-held table on the max-flow path (super edges, seed
+    frontiers, empty flows, flow deltas, join-repair deltas) is an Arrow
+    LocalRelation: with the list path of ``createDataFrame`` disabled the
+    answer still matches NetworkX. The unit-cap grid takes several
+    epochs, so both repair modes run with non-empty deltas."""
+    from pyspark.sql import SparkSession
+
+    edges = _grid_edges()
+    g = _build(spark, edges)  # the input itself may come from a list
+
+    def _refuse(*args, **kwargs):
+        raise AssertionError("list-built DataFrame on the max-flow path")
+
+    monkeypatch.setattr(SparkSession, "_create_dataframe", _refuse)
+    res = max_flow(
+        g, [100], [124],
+        MaxFlowConfig(
+            validate=True,
+            excess_list_max=4,
+            repair_join_threshold=repair_join_threshold,
+        ),
+    )
+    assert res.value == _oracle(edges, [100], [124])
+    assert res.metrics.phases >= 2

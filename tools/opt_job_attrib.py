@@ -1,7 +1,10 @@
 """Per-JOB attribution for registry queries: runs each named query with
 the event log on and prints every Spark job's callsite/description plus
 task count — the "where do this entry's N jobs come from" answer that
-the per-query totals of opt_shuffle_probe.py cannot give.
+the per-query totals of opt_shuffle_probe.py cannot give. ``py`` counts
+the job's tasks in stages that scan a PythonRDD (a DataFrame built from
+a Python list): each such task runs in a Python worker, so a list-built
+frame that re-enters a hot plan shows up there.
 
 Usage: python tools/opt_job_attrib.py <out.json> [query ...]
 """
@@ -56,6 +59,7 @@ def main() -> None:
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         rows: dict[int, dict] = {}
         stage_tasks: dict[int, int] = {}
+        py_stage_tasks: dict[int, int] = {}
         stage_of_job: dict[int, list[int]] = {}
         with open(log_file) as fh:
             lines = fh.readlines()
@@ -74,6 +78,7 @@ def main() -> None:
                     or props.get("callSite.short", ""),
                     "callsite": props.get("callSite.short", ""),
                     "tasks": 0,
+                    "py_tasks": 0,
                 }
                 stage_of_job[jid] = [
                     s.get("Stage ID") for s in ev.get("Stage Infos", [])
@@ -81,8 +86,11 @@ def main() -> None:
             elif e == "SparkListenerStageCompleted":
                 si = ev.get("Stage Info", {})
                 stage_tasks[si.get("Stage ID")] = si.get("Number of Tasks", 0)
+                if any(r.get("Name") == "PythonRDD" for r in si.get("RDD Info", [])):
+                    py_stage_tasks[si.get("Stage ID")] = si.get("Number of Tasks", 0)
         for jid, sids in stage_of_job.items():
             rows[jid]["tasks"] = sum(stage_tasks.get(s, 0) for s in sids)
+            rows[jid]["py_tasks"] = sum(py_stage_tasks.get(s, 0) for s in sids)
         return list(rows.values()), len(lines)
 
     offset = 0
@@ -96,9 +104,13 @@ def main() -> None:
         release_tracked()
         jobs, offset = _jobs_since(offset)
         report[name] = jobs
-        print(f"== {name}: {len(jobs)} jobs")
+        py_tasks = sum(j["py_tasks"] for j in jobs)
+        print(f"== {name}: {len(jobs)} jobs, {py_tasks} PythonRDD tasks")
         for j in jobs:
-            print(f"   job {j['job']:>4}  tasks {j['tasks']:>5}  {j['callsite']}")
+            print(
+                f"   job {j['job']:>4}  tasks {j['tasks']:>5}  py {j['py_tasks']:>3}"
+                f"  {j['callsite']}"
+            )
     with open(out_path, "w") as fh:
         json.dump(report, fh, indent=1)
     spark.stop()
