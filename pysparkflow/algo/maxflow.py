@@ -48,19 +48,19 @@ Checkpointed frontiers carry NO size statistics, so Catalyst would plan
 every round's join sort-merge and exchange the arc cache once per round;
 the driver loop instead gates explicit broadcasts on the frontier/visited
 counts it already tracks (the same schimmy discipline as the pagerank
-family), falling back to the shuffle join above the gate. Path-carrying
-sides (frontier, stored-path meet) gate on ESTIMATED BYTES — rows x
-(24 + 16*path-length bound) against engine/partitioning.
-STATE_BROADCAST_BYTES — because their rows are arrays, not scalars; the
-narrow visited column keeps the STATE_BROADCAST_ROWS row gate. Driver traffic per phase is
-the meet candidates (bounded by ``max_candidates``) and the accepted-flow
-deltas — both tiny. Driver-built tables (seed frontiers, the empty and
-delta flow tables, join-repair deltas; super edges in graph.py) enter
-plans as Arrow LocalRelations (session.local_frame), scanned in the JVM:
-built from a Python list they were PythonRDD scans, and every action
-that re-scanned one paid ~210 ms of Python-worker tasks on a 4-core
-host. All randomness is hash-seeded (ff1/Vertex.java:60
-discipline), so task retries and speculative execution are safe.
+family), falling back to the shuffle join above the gate. Every gate is
+engine/partitioning.broadcastable against its one 32 MB budget;
+path-carrying sides (frontier, stored-path meet) pass ESTIMATED row
+bytes — 24 + 16*path-length bound — because their rows are arrays, not
+scalars. Driver traffic per phase is the meet candidates (bounded by
+``max_candidates``) and the accepted-flow deltas — both tiny.
+Driver-built tables (seed frontiers, the empty and delta flow tables,
+join-repair deltas; super edges in graph.py) enter plans as Arrow
+LocalRelations (session.local_frame), scanned in the JVM: built from a
+Python list they were PythonRDD scans, and every action that re-scanned
+one paid ~210 ms of Python-worker tasks on a 4-core host. All
+randomness is hash-seeded (ff1/Vertex.java:60 discipline), so task
+retries and speculative execution are safe.
 """
 
 from __future__ import annotations
@@ -78,6 +78,7 @@ from pyspark.sql.window import Window
 
 from pysparkflow.engine.acceptor import GreedyAcceptor
 from pysparkflow.engine.metrics import RoundMetrics
+from pysparkflow.engine.partitioning import broadcastable, sized_partitions
 from pysparkflow.graph.graph import FlowGraph
 from pysparkflow.session import local_frame
 
@@ -95,20 +96,25 @@ _REPAIR_SCHEMA = T.StructType(
     [T.StructField(c, T.LongType()) for c in ("au", "av", "d")]
 )
 
-# above this many flow-carrying edges, stop broadcasting the flows table
-# and fall back to a shuffle join (driver knows the exact count for free)
-_FLOW_BROADCAST_LIMIT = 2_000_000
+# hash seed of the per-vertex K-best path pick (ff1/Vertex.java:60)
+_SEED = 42
+# delta-set size above which repair switches from a broadcast map
+# literal (_repair_paths) to the distributed join (_repair_paths_join)
+_REPAIR_JOIN_DELTAS = 20_000
 
 
 @dataclass
 class MaxFlowConfig:
     """Tuning knobs, mirroring the reference's ``-D mf.*`` keys
-    (main.java:17-20, run:123-139)."""
+    (main.java:17-20, run:123-139). ``mf.max.epath.length`` has no
+    field: paths grow one vertex per round and the byte-aware broadcast
+    gates bound what they cost, so a length cap could only turn the
+    exact answer approximate. Stored paths are always repaired and
+    carried across epochs (the reference's D9 flow update + saturation
+    filter, ff1/Vertex.java:213-250) instead of re-growing the BFS."""
 
     excess_list_max: int = 1  # K best paths kept per vertex/side (mf.excess.list.max, D10)
-    max_path_len: int | None = None  # mf.max.epath.length; binding cap => approx result
     max_candidates: int = 20_000  # driver-side collect bound per phase
-    max_phases: int | None = None  # safety valve; None = run to optimality
     # approximate early stop (the family's mf.approx=0.95 knob, run:138,
     # main.java:47-50 — the ff7/ff8 approx variants are absent from the
     # snapshot): stop once a phase's gain falls below (1-approx) x total,
@@ -118,15 +124,6 @@ class MaxFlowConfig:
     # candidates — meets from several depths conflict less on unit-capacity
     # edges, so phases accept bigger batches (fewer phases overall)
     meet_extra_rounds: int = 2
-    # incremental excess maintenance (the reference's D9 flow-update +
-    # saturation filter, ff1/Vertex.java:213-250): after accepting a batch,
-    # repair stored paths against the new flows and keep searching from
-    # them instead of restarting the BFS. False = restart every phase.
-    incremental: bool = True
-    # delta-set size above which repair switches from a broadcast map
-    # literal (_repair_paths) to the distributed join (_repair_paths_join)
-    repair_join_threshold: int = 20_000
-    seed: int = 42
     validate: bool = False  # run flow-conservation/capacity invariant checks at end
     verbose: bool = False
 
@@ -234,7 +231,7 @@ def _repair_paths_join(df: DataFrame, delta_df: DataFrame) -> DataFrame:
 
 
 def _residual_arcs(
-    edges: DataFrame, flows: DataFrame | None, broadcast_flows: bool
+    edges: DataFrame, flows: DataFrame, broadcast_flows: bool
 ) -> DataFrame:
     """Directed residual arcs from the canonical undirected edges + signed
     flows: residue(u->v) = cap - f, residue(v->u) = cap + f
@@ -259,11 +256,9 @@ def _extend(
     own_paths: DataFrame,
     forward: bool,
     k: int,
-    seed: int,
     rnd: int,
-    max_path_len: int | None,
-    n_frontier: int | None = None,
-    n_own: int | None = None,
+    n_frontier: int,
+    n_own: int,
     *,
     frontier_row_bytes: int,
 ) -> DataFrame:
@@ -285,20 +280,13 @@ def _extend(
     (guide §2.4/§3.1). The frontier carries ``verts``/``ress`` path
     arrays, so its gate is BYTE-aware: ``frontier_row_bytes`` is the
     caller's static per-row byte bound and the broadcast only fires
-    under the 32 MB STATE_BROADCAST_BYTES budget (VERDICT r13 #1 — the
-    row gate alone would happily broadcast a hundreds-of-MB frontier at
-    cluster scale). It is required and keyword-only: a narrow-row
-    default would silently re-open that hazard. The visited side is a
-    single long column, so its row gate's 16-B/row arithmetic holds
-    as-is. Join results are identical either way."""
-    from pysparkflow.engine.partitioning import (
-        STATE_BROADCAST_ROWS,
-        wide_rows_broadcastable,
-    )
-
-    if max_path_len is not None:
-        frontier = frontier.where(F.size("verts") <= max_path_len)
-    if n_frontier is not None and wide_rows_broadcastable(n_frontier, frontier_row_bytes):
+    under the 32 MB BROADCAST_BYTES budget (VERDICT r13 #1 — a row gate
+    alone would happily broadcast a hundreds-of-MB frontier at cluster
+    scale). It is required and keyword-only: a narrow-row default would
+    silently re-open that hazard. The visited side is a single long
+    column, so the gate's 16-B/row default holds as-is. Join results
+    are identical either way."""
+    if broadcastable(n_frontier, frontier_row_bytes):
         frontier = F.broadcast(frontier)
     if forward:
         ext = frontier.join(arcs, frontier.vertex == arcs.src).select(
@@ -313,10 +301,10 @@ def _extend(
             F.concat(F.array(F.col("res")), F.col("ress")).alias("ress"),
         )
     visited = own_paths.select("vertex")
-    if n_own is not None and n_own <= STATE_BROADCAST_ROWS:
+    if broadcastable(n_own):
         visited = F.broadcast(visited)
     ext = ext.join(visited, "vertex", "left_anti")
-    pick = F.xxhash64("verts", F.lit(seed + rnd))
+    pick = F.xxhash64("verts", F.lit(_SEED + rnd))
     if k == 1:
         # hash-aggregate with map-side partial combine — no window sort
         return (
@@ -332,6 +320,29 @@ def _extend(
     )
 
 
+def _meet(
+    side: DataFrame, other: DataFrame, n_other: int, row_bytes: int, limit: int
+) -> DataFrame:
+    """Meet-in-the-middle (D6): the rows of ``side`` whose vertex the
+    opposite side's path table ``other`` also reached, each paired with
+    that path as ``o_verts``/``o_ress``, in a deterministic order capped
+    at ``limit`` candidates. ``other`` is bounded by its visited count
+    ``n_other``; its rows carry path arrays of ``row_bytes`` at most, so
+    the gate is byte-aware — under it ``side`` is probed in place."""
+    o = other.select(
+        F.col("vertex"),
+        F.col("verts").alias("o_verts"),
+        F.col("ress").alias("o_ress"),
+    )
+    if broadcastable(n_other, row_bytes):
+        o = F.broadcast(o)
+    return (
+        side.join(o, "vertex")
+        .orderBy("vertex", F.xxhash64("verts"))
+        .limit(limit)
+    )
+
+
 def max_flow(
     graph: FlowGraph,
     sources: Iterable[int],
@@ -344,8 +355,6 @@ def max_flow(
     cfg = config or MaxFlowConfig()
     g, s_id, t_id = graph.with_super_nodes(sources, sinks)
     spark = g.spark
-
-    from pysparkflow.engine.partitioning import sized_partitions
 
     _t_init = _time.time()
     # materialize once; the static graph is never shuffled again. The
@@ -374,40 +383,36 @@ def max_flow(
             _time.time() - t0
         )
     total = 0
-    phase_cache: list[DataFrame] = []
 
-    # stored-path state carried across acceptance epochs (incremental mode):
-    # consolidated, repaired, localCheckpointed path tables per side, plus
-    # per-side row-count UPPER BOUNDS (repair only drops rows, so the
-    # accumulated visited counts stay valid) — the broadcast gates below
-    # need a bound, never an exact count (guide §3.1)
+    # stored-path state carried across acceptance epochs: consolidated,
+    # repaired, localCheckpointed path tables per side, plus per-side
+    # row-count UPPER BOUNDS (repair only drops rows, so the accumulated
+    # visited counts stay valid) — the broadcast gates below need a
+    # bound, never an exact count (guide §3.1)
     stored: tuple[DataFrame, DataFrame, int, int] | None = None
-    from pysparkflow.engine.partitioning import wide_rows_broadcastable
 
     def _path_row_bytes() -> int:
         """Static per-row byte bound for path-carrying tables (frontier /
         stored paths): ``verts`` + ``ress`` are long arrays of at most
-        ``len_bound`` elements each (paths grow ONE vertex per extension
-        round, globally, and ``max_path_len`` caps the extension input
-        when set), 8 B per element x 2 arrays + 24 B of fixed row
-        overhead. Always an over-estimate, never an under-estimate —
-        the broadcast gates below must not OOM at cluster scale
-        (VERDICT r13 #1)."""
-        len_bound = metrics.rounds + 1
-        if cfg.max_path_len is not None:
-            len_bound = min(len_bound, cfg.max_path_len + 1)
-        return 24 + 16 * len_bound
+        ``1 + metrics.rounds`` elements each, 8 B per element x 2 arrays
+        + 24 B of fixed row overhead. The global round count is a sound
+        length bound because paths grow ONE vertex per extension round
+        and are never restarted: stored paths persist across epochs
+        (repair drops rows, never shortens them), so every path was
+        built in some round so far. Always an over-estimate, never an
+        under-estimate — the broadcast gates below must not OOM at
+        cluster scale (VERDICT r13 #1)."""
+        return 24 + 16 * (metrics.rounds + 1)
 
     _seg("init", _t_init)
-    while cfg.max_phases is None or metrics.phases < cfg.max_phases:
+    while True:
         metrics.phases += 1
         # cached per phase: the flows join + residual filter run once; every
         # round's joins scan the in-memory arc cache
         _t = _time.time()
         arcs = _residual_arcs(
-            edges, flows, broadcast_flows=flow_edge_count <= _FLOW_BROADCAST_LIMIT
+            edges, flows, broadcast_flows=broadcastable(flow_edge_count)
         ).persist()
-        phase_cache.append(arcs)
         _seg("arcs_build", _t)
 
         # frontiers are localCheckpointed every round: this both materializes
@@ -436,17 +441,8 @@ def max_flow(
             frontier_s, frontier_t = paths_s, paths_t
             # stored pairs meeting at a vertex were not all accepted last
             # epoch — re-collect them before spending any rounds
-            o = paths_t.select(
-                F.col("vertex"),
-                F.col("verts").alias("o_verts"),
-                F.col("ress").alias("o_ress"),
-            )
-            if wide_rows_broadcastable(v_t, _path_row_bytes()):
-                o = F.broadcast(o)
-            meets_df = (
-                paths_s.join(o, "vertex")
-                .orderBy("vertex", F.xxhash64("verts"))
-                .limit(cfg.max_candidates)
+            meets_df = _meet(
+                paths_s, paths_t, v_t, _path_row_bytes(), cfg.max_candidates
             )
             # three independent jobs over the SAME checkpointed path
             # state — submit concurrently (guide §2.6)
@@ -479,28 +475,17 @@ def max_flow(
                 own,
                 extend_s,
                 cfg.excess_list_max,
-                cfg.seed,
                 rnd,
-                cfg.max_path_len,
                 n_frontier=n_s if extend_s else n_t,
                 n_own=v_s if extend_s else v_t,
                 frontier_row_bytes=_path_row_bytes(),
             ).localCheckpoint(eager=False)  # truncate lineage; the count below materializes
-            other = paths_t if extend_s else paths_s
-            o = other.select(
-                F.col("vertex"),
-                F.col("verts").alias("o_verts"),
-                F.col("ress").alias("o_ress"),
-            )
-            if wide_rows_broadcastable(v_t if extend_s else v_s, _path_row_bytes()):
-                # the opposite side's path table is bounded by its visited
-                # count; its rows carry path arrays, so the gate is
-                # byte-aware — probe the fresh frontier in place for the meet
-                o = F.broadcast(o)
-            meets_df = (
-                new_f.join(o, "vertex")
-                .orderBy("vertex", F.xxhash64("verts"))
-                .limit(cfg.max_candidates - len(candidates))
+            meets_df = _meet(
+                new_f,
+                paths_t if extend_s else paths_s,
+                v_t if extend_s else v_s,
+                _path_row_bytes(),
+                cfg.max_candidates - len(candidates),
             )
             # ONE job materializes the lazy checkpoint and returns the
             # convergence count (the batch-8 checkpoint+count fusion —
@@ -541,6 +526,7 @@ def max_flow(
                 break
 
         if not candidates:
+            arcs.unpersist()
             break  # optimal
 
         _t = _time.time()
@@ -600,44 +586,39 @@ def max_flow(
         _seg("flows_update", _t)
 
         _t = _time.time()
-        if cfg.incremental:
-            # D9: repair surviving paths against this epoch's deltas and
-            # carry them into the next epoch (consolidated + checkpointed
-            # BEFORE the arc cache they were built from is dropped)
-            delta_items = [(k, int(v)) for k, v in acceptor.delta.items() if v != 0]
-            if len(delta_items) <= cfg.repair_join_threshold:
-                rep_s = _repair_paths(paths_s, delta_items)
-                rep_t = _repair_paths(paths_t, delta_items)
-            else:
-                # too many deltas for a map literal — distributed join
-                # repair instead of abandoning the stored search state
-                repair_df = local_frame(
-                    spark, [(x, y, d) for (x, y), d in delta_items], _REPAIR_SCHEMA
-                )
-                rep_s = _repair_paths_join(paths_s, repair_df)
-                rep_t = _repair_paths_join(paths_t, repair_df)
-            # ONE materialization job for both sides: tag + union +
-            # checkpoint, then split by tag over the cached partitions
-            # (coalesce bounds the union-accumulated partition count)
-            tagged = (
-                rep_s.withColumn("_side", F.lit("s"))
-                .unionAll(rep_t.withColumn("_side", F.lit("t")))
-                .coalesce(n_shuffle)
-                .localCheckpoint()
-            )
-            stored = (
-                tagged.where(F.col("_side") == "s").drop("_side"),
-                tagged.where(F.col("_side") == "t").drop("_side"),
-                v_s,
-                v_t,
-            )
+        # D9: repair surviving paths against this epoch's deltas and
+        # carry them into the next epoch (consolidated + checkpointed
+        # BEFORE the arc cache they were built from is dropped)
+        delta_items = [(k, int(v)) for k, v in acceptor.delta.items() if v != 0]
+        if len(delta_items) <= _REPAIR_JOIN_DELTAS:
+            rep_s = _repair_paths(paths_s, delta_items)
+            rep_t = _repair_paths(paths_t, delta_items)
         else:
-            stored = None
+            # too many deltas for a map literal — distributed join
+            # repair instead of abandoning the stored search state
+            repair_df = local_frame(
+                spark, [(x, y, d) for (x, y), d in delta_items], _REPAIR_SCHEMA
+            )
+            rep_s = _repair_paths_join(paths_s, repair_df)
+            rep_t = _repair_paths_join(paths_t, repair_df)
+        # ONE materialization job for both sides: tag + union +
+        # checkpoint, then split by tag over the cached partitions
+        # (coalesce bounds the union-accumulated partition count)
+        tagged = (
+            rep_s.withColumn("_side", F.lit("s"))
+            .unionAll(rep_t.withColumn("_side", F.lit("t")))
+            .coalesce(n_shuffle)
+            .localCheckpoint()
+        )
+        stored = (
+            tagged.where(F.col("_side") == "s").drop("_side"),
+            tagged.where(F.col("_side") == "t").drop("_side"),
+            v_s,
+            v_t,
+        )
         _seg("repair", _t)
 
-        for df in phase_cache:
-            df.unpersist()
-        phase_cache.clear()
+        arcs.unpersist()
         if (
             cfg.approx is not None
             and total > 0
@@ -651,9 +632,6 @@ def max_flow(
             metrics.early_stop_phase = metrics.phases
             break
 
-    for df in phase_cache:
-        df.unpersist()
-    phase_cache.clear()
     if cfg.validate:
         _t = _time.time()
         _validate(edges, flows, s_id, t_id, total, n_flows=flow_edge_count)
@@ -668,7 +646,7 @@ def _validate(
     s_id: int,
     t_id: int,
     total: int,
-    n_flows: int | None = None,
+    n_flows: int,
 ) -> None:
     """The reference's fail-fast runtime invariants (SURVEY.md §5.2 /
     FIXTURES.md §6): capacity bounds (ff1/Edge.java:66-71) and per-vertex
@@ -677,9 +655,7 @@ def _validate(
     flow_edge_count) gates an explicit broadcast of the checkpointed
     flows side — statless, it would otherwise SMJ-exchange the edge
     cache."""
-    fl = flows
-    if n_flows is not None and n_flows <= _FLOW_BROADCAST_LIMIT:
-        fl = F.broadcast(flows)
+    fl = F.broadcast(flows) if broadcastable(n_flows) else flows
     bad_cap_df = (
         fl.join(edges, ["u", "v"])
         .where(F.abs(F.col("f")) > F.col("cap"))

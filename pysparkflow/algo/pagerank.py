@@ -57,7 +57,10 @@ def pagerank(
     identity costing one sort-merge stage per round (VERDICT r5 #5,
     the iterative scheduler floor). Semantics are unchanged where the
     precondition holds; leave False for general directed inputs.
-    Returns (vertex, rank)."""
+    Returns (vertex, rank); the cached arc and vertex tables it scans
+    stay persisted until the caller runs engine/cache.release_tracked().
+    """
+    from pysparkflow.engine.cache import track
     from pysparkflow.engine.partitioning import (
         sized_cache,
         sized_partitions,
@@ -77,9 +80,11 @@ def pagerank(
     # static side: edges with outdegree attached, cached once (schimmy).
     # The degree side (<= n_edges rows) is broadcast-gated: the aggregate
     # output otherwise re-exchanges and Catalyst sort-merge-joins it
-    # against the edge cache — one avoidable |E|-sort per query at build
-    arcs = e.join(state_join_side(deg, n_edges, arc_parts, "u"), "u").persist()
-    verts = arcs.select(F.col("u").alias("vertex")).distinct().persist()
+    # against the edge cache — one avoidable |E|-sort per query at build.
+    # Tracked persists: the returned lazy ranks plan still scans these;
+    # callers release via engine/cache.release_tracked after consuming
+    arcs = track(e.join(state_join_side(deg, n_edges, arc_parts, "u"), "u"))
+    verts = track(arcs.select(F.col("u").alias("vertex")).distinct())
     n = verts.count()  # materializes arcs/verts from e's cache
     e.unpersist()  # rounds scan arcs; the raw edge cache is done
     if validate:

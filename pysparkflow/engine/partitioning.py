@@ -26,35 +26,27 @@ from pyspark.sql import DataFrame, SparkSession
 
 ROWS_PER_PARTITION = 150_000
 
-# Per-round vertex-state join sides (ranks, dists, labels) up to this
-# many rows ship as an explicit broadcast: the static arc cache is then
-# streamed in place — no exchange, no per-round sort of the graph.
-# Above it, the state is co-partitioned onto the arc cache's partition
-# count instead, which still never reshuffles the arcs (the state side
-# pays its one exchange; a billion-vertex cluster run keeps state
-# distributed). Same size-gated discipline as maxflow's
-# _FLOW_BROADCAST_LIMIT. 2M rows of (long, double/long) is ~32 MB
-# broadcast — comfortable for driver and executors at any sane config.
-STATE_BROADCAST_ROWS = 2_000_000
-
-# Byte budget matching the row gate's own arithmetic (2M rows x ~16 B =
-# 32 MB): state whose rows carry variable-width payloads (path arrays)
-# must gate on ESTIMATED BYTES, not rows — a 1.9M-row frontier of
-# 30-element long arrays is hundreds of MB and would OOM the driver/
-# executors if the row gate shipped it (VERDICT r13 #1).
-STATE_BROADCAST_BYTES = 32 * 2**20
+# The one broadcast budget for driver-gated join sides (per-round vertex
+# state, maxflow frontiers / stored paths / flows, candidate sets): up
+# to this many estimated bytes the side ships as an explicit broadcast
+# and the static side it joins (arc cache, index) is streamed in place —
+# no exchange, no per-round sort. Above it the caller falls back to a
+# shuffle (or co-partitioned) join, which still never reshuffles the
+# arcs. 2M rows of (long, double/long) at ~16 B is 32 MB — comfortable
+# for driver and executors at any sane config.
+BROADCAST_BYTES = 32_000_000
 
 
-def wide_rows_broadcastable(rows: int, row_bytes: int) -> bool:
-    """Broadcast gate for join sides whose rows carry variable-width
-    payloads: ``rows`` is a caller-known row-count upper bound and
-    ``row_bytes`` a static per-row byte bound (e.g. 24 + 16*max_path_len
-    for a maxflow frontier carrying two long arrays). True only when the
-    estimated relation fits the same 32 MB budget the narrow-row
-    STATE_BROADCAST_ROWS gate encodes; callers fall back to the shuffle
-    join above it. Strictly tighter than the row gate for any
-    ``row_bytes`` >= 16."""
-    return rows * row_bytes <= STATE_BROADCAST_BYTES
+def broadcastable(rows: int, row_bytes: int = 16) -> bool:
+    """Broadcast gate: ``rows`` is a caller-known row-count upper bound
+    and ``row_bytes`` a static per-row byte bound. Narrow rows (a vertex
+    id plus one scalar) keep the 16-B default — a 2M-row cut. Rows that
+    carry variable-width payloads must pass their bound (e.g. 24 +
+    16*path-length for a maxflow frontier carrying two long arrays): a
+    1.9M-row frontier of 30-element long arrays is hundreds of MB and
+    would OOM the driver/executors under a row-count gate (VERDICT r13
+    #1)."""
+    return rows * row_bytes <= BROADCAST_BYTES
 
 # streaming state stores are created per shuffle partition (a
 # stream-stream join opens FOUR per partition); at local sf0.1 the
@@ -126,15 +118,15 @@ def state_join_side(
     the 10 unrolled rounds).
 
     ``upper_rows`` is a caller-known BOUND on the state's row count
-    (exact vertex count where available, else the arc count). At or
-    under ``STATE_BROADCAST_ROWS`` the state ships as a broadcast: the
+    (exact vertex count where available, else the arc count). Under the
+    ``broadcastable`` gate the state ships as a broadcast: the
     round plan becomes scan-cache -> BroadcastHashJoin -> partial agg ->
     one state-sized exchange. Above it, the state is hash-repartitioned
     on ``key_cols`` to ``arc_partitions`` so it co-partitions with the
     cache (state pays its single exchange; the graph still never moves).
     Join RESULTS are identical either way — only the physical strategy
     changes."""
-    if upper_rows <= STATE_BROADCAST_ROWS:
+    if broadcastable(upper_rows):
         from pyspark.sql import functions as F
 
         return F.broadcast(state)

@@ -140,9 +140,9 @@ def _jaccard_verify(
     cands-side and sizes-side joins ship as explicit broadcasts — the
     inverted index is probed in place instead of being exchanged for a
     sort-merge join. Results are identical either way."""
-    from pysparkflow.engine.partitioning import STATE_BROADCAST_ROWS
+    from pysparkflow.engine.partitioning import broadcastable
 
-    small = n_cands is not None and 2 * n_cands <= STATE_BROADCAST_ROWS
+    small = n_cands is not None and broadcastable(2 * n_cands)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
     a = sh.select(F.col("id").alias("id_a"), "sh")
     b = sh.select(F.col("id").alias("id_b"), "sh")
@@ -195,14 +195,14 @@ def _pruned_index(
     dominant shuffle). Candidate-id sets up to the broadcast gate ship as
     an explicit broadcast, so the prune is one map-only probe of the
     cached index; bigger sets fall back to the shuffled semi-join."""
-    from pysparkflow.engine.partitioning import STATE_BROADCAST_ROWS
+    from pysparkflow.engine.partitioning import broadcastable
 
     cand_ids = (
         cands.select(F.col("id_a").alias("id"))
         .unionByName(cands.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    if 2 * n_cands <= STATE_BROADCAST_ROWS:
+    if broadcastable(2 * n_cands):
         cand_ids = F.broadcast(cand_ids)
     return track(
         sh.join(cand_ids, "id", "semi").select("id", *extra_cols, "sh")

@@ -91,7 +91,12 @@ def temperature_mixture(
     group→threshold table (|groups| rows) back onto a map-only filter —
     the corpus itself never shuffles. Groups larger than their allocation
     are rate-limited; groups small enough to fit entirely are kept whole
-    (rate capped at 1), matching temperature-sampling-with-ceiling."""
+    (rate capped at 1), matching temperature-sampling-with-ceiling.
+
+    The per-group count table is persisted (``engine/cache.track``) and
+    the returned plan scans it: it stays cached for the session's
+    lifetime until the caller runs ``engine/cache.release_tracked()``
+    after consuming the result."""
     if alpha != 0.5:
         raise ValueError("alpha is fixed at 0.5 (sqrt) for oracle-exact replay")
     from pysparkflow.engine.cache import track

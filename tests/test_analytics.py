@@ -501,3 +501,27 @@ def test_personalized_pagerank_validates_seeds_and_sinks(spark):
     directed = spark.createDataFrame([(1, 2)], "src long, dst long")
     with _pytest.raises(ValueError, match="only as destinations"):
         personalized_pagerank(directed, sources=[1], iterations=2)
+
+
+@pytest.mark.parametrize("personalized", [False, True], ids=["pagerank", "ppr"])
+def test_pagerank_caches_released_by_release_tracked(spark, personalized):
+    """Every table the rank operators persist is registered with
+    engine/cache.track: after consuming the ranks, release_tracked()
+    leaves the session's cache manager empty."""
+    from pysparkflow.algo.pagerank import pagerank, personalized_pagerank
+    from pysparkflow.engine.cache import release_tracked
+
+    release_tracked()
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    df = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 2), (1, 3), (3, 1)], "src long, dst long"
+    )
+    if personalized:
+        ranks = personalized_pagerank(df, sources=[1], iterations=3)
+    else:
+        ranks = pagerank(df, iterations=3)
+    assert len(ranks.collect()) == 3
+    release_tracked()
+    assert cache.isEmpty()

@@ -194,11 +194,13 @@ def _grid_edges():
     return edges
 
 
-def test_join_repair_end_to_end(spark):
+def test_join_repair_end_to_end(spark, monkeypatch):
     # force every epoch through the distributed join repair and confirm
     # the exact optimum is still reached (unit-cap grid, multi-phase)
-    _check(spark, _grid_edges(), [100], [124], repair_join_threshold=0,
-           excess_list_max=4)
+    from pysparkflow.algo import maxflow
+
+    monkeypatch.setattr(maxflow, "_REPAIR_JOIN_DELTAS", 0)
+    _check(spark, _grid_edges(), [100], [124], excess_list_max=4)
 
 
 def test_graded_lineitem_value_vs_networkx(spark):
@@ -265,11 +267,11 @@ def test_extend_probes_arc_cache_without_sort_merge(spark):
         [(10, [10], [])], "vertex long, verts array<long>, ress array<long>"
     )
     f1 = _extend(
-        seed, arcs, seed, True, 1, 42, 1, None, n_frontier=1, n_own=1,
+        seed, arcs, seed, True, 1, 1, n_frontier=1, n_own=1,
         frontier_row_bytes=24 + 16 * 2,
     ).localCheckpoint()
     out = _extend(
-        f1, arcs, f1, True, 1, 42, 2, None, n_frontier=2, n_own=3,
+        f1, arcs, f1, True, 1, 2, n_frontier=2, n_own=3,
         frontier_row_bytes=24 + 16 * 3,
     )
     plan = out._jdf.queryExecution().explainString(
@@ -277,40 +279,28 @@ def test_extend_probes_arc_cache_without_sort_merge(spark):
     )
     assert "SortMergeJoin" not in plan, plan[:2000]
     assert plan.count("BroadcastHashJoin") >= 2, plan[:2000]
-    # ungated (counts unknown) keeps the legacy shuffle-join fallback
-    fallback = _extend(
-        f1, arcs, f1, True, 1, 42, 2, None, frontier_row_bytes=24 + 16 * 3
-    )
-    fplan = fallback._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "SortMergeJoin" in fplan
 
 
 def test_wide_frontier_gate_is_byte_aware(spark):
     """A path-carrying frontier must NOT broadcast when rows x row-bytes
-    exceeds the 32 MB STATE_BROADCAST_BYTES budget, even when the row
-    count alone sits far under STATE_BROADCAST_ROWS (VERDICT r13 #1: at
-    max_path_len ~30 a 1.9M-row frontier is hundreds of MB — an OOM the
-    row gate would happily broadcast). The narrow visited side keeps its
-    row gate."""
+    exceeds the 32 MB BROADCAST_BYTES budget, even when the row count
+    alone sits far under the narrow rows' 2M cut (VERDICT r13 #1: with
+    ~30-vertex paths a 1.9M-row frontier is hundreds of MB — an OOM a
+    row gate would happily broadcast). The narrow visited side keeps
+    the 16-B default."""
     from pysparkflow.algo.maxflow import _empty_flows, _extend, _residual_arcs
-    from pysparkflow.engine.partitioning import (
-        STATE_BROADCAST_BYTES,
-        STATE_BROADCAST_ROWS,
-        wide_rows_broadcastable,
-    )
+    from pysparkflow.engine.partitioning import BROADCAST_BYTES, broadcastable
 
-    # the helper's arithmetic: at 520 B/row (max_path_len=31 bound),
-    # the fallback fires at ~64.5k rows — three orders of magnitude
-    # under the 2M row gate
+    # the gate's arithmetic at its exact edges: narrow 16-B rows cut at
+    # exactly 2M rows; at 520 B/row (31-vertex paths) the fallback fires
+    # at ~61.5k rows — three orders of magnitude under the narrow cut
+    assert broadcastable(2_000_000)
+    assert not broadcastable(2_000_001)
     row_bytes = 24 + 16 * 31
-    limit = STATE_BROADCAST_BYTES // row_bytes
-    assert wide_rows_broadcastable(limit, row_bytes)
-    assert not wide_rows_broadcastable(limit + 1, row_bytes)
-    assert limit + 1 < STATE_BROADCAST_ROWS  # the row gate WOULD have shipped it
-    # narrow rows (16 B) keep exactly the legacy 2M-row behaviour
-    assert wide_rows_broadcastable(STATE_BROADCAST_ROWS, 16)
+    limit = BROADCAST_BYTES // row_bytes
+    assert broadcastable(limit, row_bytes)
+    assert not broadcastable(limit + 1, row_bytes)
+    assert broadcastable(limit + 1)  # the narrow cut WOULD have shipped it
 
     edges = [(10, 11, 3), (11, 12, 2), (12, 13, 5), (11, 13, 4)]
     g = _build(spark, edges)
@@ -319,7 +309,7 @@ def test_wide_frontier_gate_is_byte_aware(spark):
         [(10, [10], [])], "vertex long, verts array<long>, ress array<long>"
     )
     f1 = _extend(
-        seed, arcs, seed, True, 1, 42, 1, None, n_frontier=1, n_own=1,
+        seed, arcs, seed, True, 1, 1, n_frontier=1, n_own=1,
         frontier_row_bytes=24 + 16 * 2,
     ).localCheckpoint()
     # at fixture scale Catalyst auto-broadcasts the tiny arc cache and
@@ -332,8 +322,8 @@ def test_wide_frontier_gate_is_byte_aware(spark):
         # budget: the frontier join must fall back to the shuffle join
         # while the narrow visited anti-join stays broadcast (row gate)
         wide = _extend(
-            f1, arcs, f1, True, 1, 42, 2, None,
-            n_frontier=2, n_own=3, frontier_row_bytes=STATE_BROADCAST_BYTES,
+            f1, arcs, f1, True, 1, 2,
+            n_frontier=2, n_own=3, frontier_row_bytes=BROADCAST_BYTES,
         )
         plan = wide._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -342,7 +332,7 @@ def test_wide_frontier_gate_is_byte_aware(spark):
         assert "BroadcastHashJoin" in plan, plan[:2000]
         # under the bound, the frontier broadcasts: no shuffle join left
         ok = _extend(
-            f1, arcs, f1, True, 1, 42, 2, None,
+            f1, arcs, f1, True, 1, 2,
             n_frontier=2, n_own=3, frontier_row_bytes=row_bytes,
         )
         okplan = ok._jdf.queryExecution().explainString(
@@ -353,6 +343,38 @@ def test_wide_frontier_gate_is_byte_aware(spark):
         assert sorted(map(tuple, wide.collect())) == sorted(map(tuple, ok.collect()))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+
+
+def test_meet_gate_is_byte_aware(spark):
+    """The restart meet and the per-round meet share one helper: the
+    opposite side's path table broadcasts under the byte budget and
+    falls back to the shuffle join above it, with identical candidates
+    either way."""
+    from pysparkflow.algo.maxflow import _FRONTIER_SCHEMA, _meet
+    from pysparkflow.engine.partitioning import BROADCAST_BYTES
+
+    side = spark.createDataFrame(
+        [(12, [10, 11, 12], [3, 2]), (13, [10, 13], [4])], _FRONTIER_SCHEMA
+    ).localCheckpoint()
+    other = spark.createDataFrame(
+        [(12, [12, 14], [5]), (14, [14], []), (13, [13, 12, 14], [1, 5])],
+        _FRONTIER_SCHEMA,
+    ).localCheckpoint()
+    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = {}
+        for row_bytes, strategy in [(24 + 16 * 3, "BroadcastHashJoin"),
+                                    (BROADCAST_BYTES, "SortMergeJoin")]:
+            df = _meet(side, other, 3, row_bytes, 10)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert strategy in plan, plan[:2000]
+            out[strategy] = [tuple(map(repr, r)) for r in df.collect()]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+    assert out["BroadcastHashJoin"] == out["SortMergeJoin"]
+    assert [r[0] for r in out["SortMergeJoin"]] == ["12", "13"]
+    assert _meet(side, other, 3, 24 + 16 * 3, 1).count() == 1  # capped
 
 
 def test_extend_requires_frontier_row_bytes(spark):
@@ -370,14 +392,14 @@ def test_extend_requires_frontier_row_bytes(spark):
     arcs = _residual_arcs(g.edges, _empty_flows(spark), True)
     seed = spark.createDataFrame([(10, [10], [])], _FRONTIER_SCHEMA)
     with pytest.raises(TypeError, match="frontier_row_bytes"):
-        _extend(seed, arcs, seed, True, 1, 42, 1, None, n_frontier=1, n_own=1)
+        _extend(seed, arcs, seed, True, 1, 1, n_frontier=1, n_own=1)
     with pytest.raises(TypeError):
-        # keyword-only: an eleventh positional argument is refused too
-        _extend(seed, arcs, seed, True, 1, 42, 1, None, 1, 1, 56)
+        # keyword-only: a ninth positional argument is refused too
+        _extend(seed, arcs, seed, True, 1, 1, 1, 1, 56)
 
 
-@pytest.mark.parametrize("repair_join_threshold", [20_000, 0], ids=["map", "join"])
-def test_max_flow_builds_no_python_rdd(spark, monkeypatch, repair_join_threshold):
+@pytest.mark.parametrize("repair_join_deltas", [20_000, 0], ids=["map", "join"])
+def test_max_flow_builds_no_python_rdd(spark, monkeypatch, repair_join_deltas):
     """Every driver-held table on the max-flow path (super edges, seed
     frontiers, empty flows, flow deltas, join-repair deltas) is an Arrow
     LocalRelation: with the list path of ``createDataFrame`` disabled the
@@ -385,6 +407,9 @@ def test_max_flow_builds_no_python_rdd(spark, monkeypatch, repair_join_threshold
     epochs, so both repair modes run with non-empty deltas."""
     from pyspark.sql import SparkSession
 
+    from pysparkflow.algo import maxflow
+
+    monkeypatch.setattr(maxflow, "_REPAIR_JOIN_DELTAS", repair_join_deltas)
     edges = _grid_edges()
     g = _build(spark, edges)  # the input itself may come from a list
 
@@ -394,11 +419,7 @@ def test_max_flow_builds_no_python_rdd(spark, monkeypatch, repair_join_threshold
     monkeypatch.setattr(SparkSession, "_create_dataframe", _refuse)
     res = max_flow(
         g, [100], [124],
-        MaxFlowConfig(
-            validate=True,
-            excess_list_max=4,
-            repair_join_threshold=repair_join_threshold,
-        ),
+        MaxFlowConfig(validate=True, excess_list_max=4),
     )
     assert res.value == _oracle(edges, [100], [124])
     assert res.metrics.phases >= 2

@@ -64,15 +64,15 @@ def test_state_join_side_copartitions_above_gate(spark):
     never move (cluster-scale path of the same helper)."""
     from pyspark.sql import functions as F
 
-    from pysparkflow.engine.partitioning import (
-        STATE_BROADCAST_ROWS,
-        state_join_side,
-    )
+    from pysparkflow.engine.partitioning import state_join_side
 
     state = spark.range(10).select(
         F.col("id").alias("u"), F.lit(1.0).alias("rank")
     )
-    side = state_join_side(state, STATE_BROADCAST_ROWS + 1, 7, "u")
+    side = state_join_side(state, 2_000_001, 7, "u")
     assert side.rdd.getNumPartitions() == 7
     plan = side._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning(u" in plan
+    # one row fewer is the last broadcast: the 16-B default cuts at 2M
+    hinted = state_join_side(state, 2_000_000, 7, "u")
+    assert "strategy=broadcast" in hinted._jdf.queryExecution().analyzed().toString()

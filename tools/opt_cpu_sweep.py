@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pysparkflow.engine.cache import release_tracked
 from pysparkflow.relational.registry import QUERIES, TABLES, load_table
 from pysparkflow.session import get_spark
-from tools.opt_shuffle_probe import parse_eventlog
+from tools.opt_shuffle_probe import events_file, parse_eventlog
 
 
 def _load_bench():
@@ -51,8 +51,6 @@ def main() -> None:
     log_dir = tempfile.mkdtemp(prefix="evlog-sweep-")
     spark = get_spark(
         app_name="opt-cpu-sweep",
-        master="local[32]",
-        shuffle_partitions=32,
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": f"file://{log_dir}",
@@ -69,24 +67,10 @@ def main() -> None:
         load_table(spark, sf_dir, t).count()
     bench._warm_streaming(spark)
 
-    def _events_file() -> str:
-        entry = next(
-            os.path.join(log_dir, f)
-            for f in os.listdir(log_dir)
-            if not f.startswith(".")
-        )
-        if os.path.isdir(entry):
-            return next(
-                os.path.join(entry, f)
-                for f in sorted(os.listdir(entry))
-                if f.startswith("events_")
-            )
-        return entry
-
     from pysparkflow.relational.registry import clear_flow_memos
 
     marks: list[tuple[str, int, float]] = []  # (name, start_line, wall)
-    evf = _events_file()
+    evf = events_file(log_dir)
 
     def _lines() -> int:
         with open(evf) as fh:
@@ -108,7 +92,7 @@ def main() -> None:
         marks.append((name, start, wall))
         print(f"[sweep] {name}: {wall}s", file=sys.stderr)
     spark.stop()
-    evf = _events_file()  # .inprogress renamed on stop
+    evf = events_file(log_dir)  # .inprogress renamed on stop
     full = open(evf).readlines()
     results: dict[str, dict] = {}
     for i, (name, start, wall) in enumerate(marks):

@@ -54,7 +54,7 @@ def main() -> None:
     names = sys.argv[3:] or ["max_flow_approx", "max_flow", "kcore"]
     bench = _load_bench()
     cal0 = bench._host_calibration()
-    spark = get_spark(master="local[32]", shuffle_partitions=32)
+    spark = get_spark()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for t in TABLES:
         load_table(spark, sf_dir, t).count()

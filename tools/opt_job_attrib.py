@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pysparkflow.engine.cache import release_tracked
 from pysparkflow.relational.registry import QUERIES, clear_flow_memos, clear_pair_memos
 from pysparkflow.session import get_spark
+from tools.opt_shuffle_probe import events_file
 
 
 def main() -> None:
@@ -36,24 +37,7 @@ def main() -> None:
         }
     )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    def _events_file() -> str:
-        # Spark 4 event-log v2 layout: a directory per app holding
-        # events_1_<app> plus an appstatus marker file
-        entry = next(
-            os.path.join(log_dir, f)
-            for f in os.listdir(log_dir)
-            if not f.startswith(".")
-        )
-        if os.path.isdir(entry):
-            return next(
-                os.path.join(entry, f)
-                for f in sorted(os.listdir(entry))
-                if f.startswith("events_")
-            )
-        return entry
-
-    log_file = _events_file()
+    log_file = events_file(log_dir)
 
     def _jobs_since(offset: int) -> tuple[list[dict], int]:
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()

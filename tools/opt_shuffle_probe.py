@@ -14,13 +14,31 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from pysparkflow.engine.cache import release_tracked
 from pysparkflow.relational.registry import QUERIES, TABLES, load_table
 from pysparkflow.session import get_spark
+
+
+def events_file(log_dir: str) -> str:
+    """The one application's event log under ``log_dir``. Spark 4
+    event-log v2 layout: a directory per app holding events_1_<app>
+    plus an appstatus marker file."""
+    entry = next(
+        os.path.join(log_dir, f)
+        for f in os.listdir(log_dir)
+        if not f.startswith(".")
+    )
+    if os.path.isdir(entry):
+        return next(
+            os.path.join(entry, f)
+            for f in sorted(os.listdir(entry))
+            if f.startswith("events_")
+        )
+    return entry
 
 
 def parse_eventlog(path: str) -> dict:
@@ -92,8 +110,6 @@ def main() -> None:
         log_dir = tempfile.mkdtemp(prefix=f"evlog-{name}-")
         spark = get_spark(
             app_name=f"probe-{name}",
-            master="local[32]",
-            shuffle_partitions=32,
             extra_conf={
                 "spark.eventLog.enabled": "true",
                 "spark.eventLog.dir": f"file://{log_dir}",
@@ -105,30 +121,14 @@ def main() -> None:
         spark.range(5_000_000).groupBy((F.col("id") % 16).alias("k")).count().collect()
         for t in TABLES:
             load_table(spark, sf_dir, t).count()
-        def _events_file() -> str:
-            # Spark 4 event-log v2 layout: a directory per app holding
-            # events_1_<app> plus an appstatus marker file
-            entry = next(
-                os.path.join(log_dir, f)
-                for f in os.listdir(log_dir)
-                if not f.startswith(".")
-            )
-            if os.path.isdir(entry):
-                return next(
-                    os.path.join(entry, f)
-                    for f in sorted(os.listdir(entry))
-                    if f.startswith("events_")
-                )
-            return entry
-
-        base_log = _events_file()
+        base_log = events_file(log_dir)
         with open(base_log) as fh:
             warm_lines = sum(1 for _ in fh)
         df = QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         release_tracked()
         spark.stop()
-        base_log = _events_file()  # .inprogress renamed on stop
+        base_log = events_file(log_dir)  # .inprogress renamed on stop
         # drop the warmup prefix: parse only events after the warm point
         full = open(base_log).readlines()
         with open(base_log + ".q", "w") as fh:
